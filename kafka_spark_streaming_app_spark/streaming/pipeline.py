@@ -111,17 +111,44 @@ def write_minikafka_stream(
 ) -> StreamingQuery:
     """write_kafka_stream's jar-less twin over the engine's own wire
     protocol (sources/minikafka_ds.py): identical
-    ``to_json(struct(*))`` serialization, executor-side Produce v0
-    transport — the reference alert sink executable with no broker
-    installation. Register the source first
-    (``register_minikafka(spark)``)."""
+    ``to_json(struct(*))`` value, placed on partition
+    ``crc32(value) % partitions`` — the reference alert sink
+    executable with no broker installation.
+
+    Each micro-batch is produced by one ``foreachBatch`` call running
+    ``mapInArrow(produce_batches).collect()``: the Produce requests go
+    out from executor tasks, in the same tasks that read the batch
+    (the minikafka source packs a small trigger into one task), and
+    no Python worker runs on the driver — none of the per-batch
+    writer planning and separate commit run a
+    ``writeStream.format("minikafka")`` sink pays on every trigger.
+    At-least-once: a failed batch fails the query with the topic and
+    batch id in its message, and a restart from the checkpoint
+    produces that batch again."""
     from ..operators.jsonpath import serialize_json
+    from ..sources.minikafka_ds import produce_batches
+
+    options = {"bootstrap": servers, "topic": topic}
+
+    def produce(batches):
+        import pyarrow as pa
+
+        yield pa.RecordBatch.from_pydict(
+            {"n": [produce_batches(options, batches)]}
+        )
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            batch_df.mapInArrow(produce, "n long").collect()
+        except Exception as exc:
+            raise RuntimeError(
+                f"minikafka sink: producing batch {batch_id} to topic "
+                f"{topic!r} at {servers} failed"
+            ) from exc
 
     return (
         serialize_json(df)
-        .writeStream.format("minikafka")
-        .option("bootstrap", servers)
-        .option("topic", topic)
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         .trigger(processingTime=f"{trigger_seconds} seconds")

@@ -10,6 +10,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the app sizes local[N] from the host's cores, not the suite's pin
+# (conftest sets SPARK_GRAFT_CPUS=8 for the in-process session)
+APP_ENV = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
 
 
 def test_app_file_source_end_to_end():
@@ -59,6 +62,7 @@ def test_app_file_source_end_to_end():
             ],
             capture_output=True,
             text=True,
+            env=APP_ENV,
             timeout=300,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
@@ -103,6 +107,7 @@ def test_app_minikafka_source_end_to_end():
             ],
             capture_output=True,
             text=True,
+            env=APP_ENV,
             timeout=int(duration) + 120,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]

@@ -12,6 +12,8 @@ This is the previously-missing reference capability
 end-to-end in-sandbox.
 """
 
+import json
+import random
 import socket
 import struct
 import threading
@@ -460,3 +462,142 @@ def test_starting_offsets_latest_skips_backlog(spark, broker):
         q.processAllAvailable()
         q.stop()
     assert "startingOffsets" in str(ei.value)
+
+
+# --- read packing and the streaming alert sink -------------------------------
+
+
+def test_stream_partitions_pack_small_triggers():
+    """The stream reader's packing rule, without a Spark session: a
+    small trigger is one read task, a backlog of RECORDS_PER_TASK x
+    partitions or more is one task per broker partition, every
+    non-empty [start, end) is read exactly once, and planning still
+    advances the maxOffsetsPerTrigger clamp base."""
+    from kafka_spark_streaming_app_spark.sources.minikafka_ds import (
+        RECORDS_PER_TASK as R,
+        _StreamReader,
+    )
+
+    reader = _StreamReader({"bootstrap": "127.0.0.1:1", "topic": "t"})
+
+    def plan(start, end):
+        return [p.ranges for p in reader.partitions(start, end)]
+
+    start = {"0": 10, "1": 0, "2": 5, "3": 7}
+    small = {"0": 300, "1": 0, "2": 400, "3": 900}
+    assert plan(start, small) == [[(0, 10, 300), (2, 5, 400), (3, 7, 900)]]
+    backlog = {p: o + R for p, o in start.items()}
+    assert plan(start, backlog) == [[(p, start[str(p)], backlog[str(p)])]
+                                    for p in range(4)]
+    assert plan(start, start) == []
+
+    rng = random.Random(5)
+    for _ in range(200):
+        nparts = rng.randint(1, 8)
+        lo = {str(p): rng.randint(0, 10**6) for p in range(nparts)}
+        hi = {p: o + rng.choice([0, rng.randint(1, 3 * R)])
+              for p, o in lo.items()}
+        groups = plan(lo, hi)
+        nonempty = sorted(
+            (int(p), lo[p], hi[p]) for p in lo if hi[p] > lo[p]
+        )
+        records = sum(e - s for _, s, e in nonempty)
+        assert len(groups) == min(len(nonempty), -(-records // R))
+        assert sorted(r for g in groups for r in g) == nonempty
+        assert all(g == sorted(g) for g in groups)
+
+    paced = _StreamReader({
+        "bootstrap": "127.0.0.1:1", "topic": "t",
+        "maxoffsetspertrigger": "10",
+    })
+    paced.partitions({"0": 0, "1": 0}, {"0": 5, "1": 5})
+    assert paced._clamp_base == {"0": 5, "1": 5}
+    paced.partitions({"0": 5, "1": 5}, {"0": 12, "1": 8})
+    assert paced._clamp_base == {"0": 12, "1": 8}
+
+
+def _read_topic(broker, topic: str, partitions: int) -> list:
+    with MiniKafkaClient(broker.bootstrap) as c:
+        return [
+            (p, bytes(v))
+            for p in range(partitions)
+            for _, _, v in c.fetch_range(
+                topic, p, 0, c.offsets(topic, p, -1)
+            )
+        ]
+
+
+def test_write_minikafka_stream_sink_contract(spark, broker, tmp_path):
+    """The alert sink ``write_minikafka_stream`` over two live
+    micro-batches: every row is produced exactly once as its
+    ``to_json(struct(*))`` value on partition ``crc32(value) % n``,
+    the placement the DataSource stream sink
+    (``writeStream.format("minikafka")``) gives too. A produce error
+    fails the query, naming the topic and batch."""
+    from pyspark.sql import functions as F
+
+    from kafka_spark_streaming_app_spark.operators.jsonpath import (
+        serialize_json,
+    )
+    from kafka_spark_streaming_app_spark.streaming.pipeline import (
+        write_minikafka_stream,
+    )
+
+    _register(spark)
+    broker.create_topic("alerts", partitions=3)
+    broker.create_topic("alerts_ds", partitions=3)
+    orders = (
+        spark.readStream.format("minikafka")
+        .option("bootstrap", broker.bootstrap)
+        .option("topic", "t")
+        .load()
+        .select(F.col("value").cast("string").alias("order_id"))
+    )
+    q = write_minikafka_stream(
+        orders, broker.bootstrap, "alerts", str(tmp_path / "ck"),
+        trigger_seconds=1,
+    )
+    sent = []
+    try:
+        with MiniKafkaClient(broker.bootstrap) as c:
+            for wave in range(2):
+                for p in (0, 1):
+                    ids = [f"w{wave}-p{p}-{i}" for i in range(20)]
+                    c.produce("t", p, [(None, o.encode()) for o in ids])
+                    sent += ids
+                q.processAllAvailable()
+        assert sum(1 for p in q.recentProgress if p["numInputRows"]) >= 2
+    finally:
+        q.stop()
+    got = _read_topic(broker, "alerts", 3)
+    assert sorted(v for _, v in got) == sorted(
+        json.dumps({"order_id": o}, separators=(",", ":")).encode()
+        for o in sent
+    )
+    assert all(p == zlib.crc32(v) % 3 for p, v in got)
+
+    ds = (
+        serialize_json(orders)
+        .writeStream.format("minikafka")
+        .option("bootstrap", broker.bootstrap)
+        .option("topic", "alerts_ds")
+        .option("checkpointLocation", str(tmp_path / "ck_ds"))
+        .start()
+    )
+    try:
+        ds.processAllAvailable()
+    finally:
+        ds.stop()
+    assert sorted(_read_topic(broker, "alerts_ds", 3)) == sorted(got)
+
+    bad = write_minikafka_stream(
+        orders, broker.bootstrap, "no_such_topic", str(tmp_path / "ck2"),
+        trigger_seconds=1,
+    )
+    try:
+        with pytest.raises(Exception) as err:
+            bad.processAllAvailable()
+    finally:
+        bad.stop()
+    assert "'no_such_topic'" in str(err.value)
+    assert "batch 0" in str(err.value)
